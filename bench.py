@@ -410,17 +410,19 @@ def main() -> None:
         # SPARK_GRAFT_CPUS=8 pass clobbered BENCH_DETAIL.json and pre-seeded
         # the next round's sidecar with 8-core numbers) or an sf-probe run
         # (the long-standing "git checkout BENCH_DETAIL.json after an sf1
-        # probe" gotcha) writes to a suffixed file instead.
+        # probe" gotcha) writes to a suffixed file instead. The suffixes
+        # compose: an sf1 run at 8 CPUs writes BENCH_DETAIL_sf1_c8.json.
         default_cpus = int(CPUS) == (os.cpu_count() or int(CPUS))
         official_sf = os.path.realpath(SF_DIR) == os.path.realpath(
             "/root/testdata/sf0.1"
         )
-        detail_name = "BASELINE_DETAIL.json" if baseline else "BENCH_DETAIL.json"
+        suffix = ""
+        if not official_sf:
+            suffix += "_" + (os.path.basename(os.path.normpath(SF_DIR)) or "probe")
         if not default_cpus:
-            detail_name = detail_name.replace(".json", f"_c{int(CPUS)}.json")
-        elif not official_sf:
-            tag = os.path.basename(os.path.normpath(SF_DIR)) or "probe"
-            detail_name = detail_name.replace(".json", f"_{tag}.json")
+            suffix += f"_c{int(CPUS)}"
+        detail_name = "BASELINE_DETAIL.json" if baseline else "BENCH_DETAIL.json"
+        detail_name = detail_name.replace(".json", f"{suffix}.json")
         try:
             with open(os.path.join(repo, detail_name), "w") as f:
                 json.dump(detail, f, indent=1)

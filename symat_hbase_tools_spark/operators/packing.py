@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from symat_hbase_tools_spark.plans.serve_cache import pin
+
 #: whitespace token count — matches text_analysis.token_stats and the DuckDB
 #: oracle (len(string_split_regex(trim(text), ' +')))
 def _n_tokens(text: F.Column) -> F.Column:
@@ -45,8 +47,6 @@ def pack_sequences(
     Output: id_col, n_tokens, start_offset (position on the token tape),
     seq_id (BIGINT). Deterministic in doc order regardless of input layout.
     """
-    from pyspark import StorageLevel
-
     from symat_hbase_tools_spark.plans.partitioning import scan_fanout
 
     n_tok = _n_tokens(F.col(text_col)).cast("long")
@@ -63,10 +63,11 @@ def pack_sequences(
         .orderBy(id_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # persist: the windowed table feeds the per-partition totals AND the
+    # pin: the windowed table feeds the per-partition totals AND the
     # final join — without it the scan + range exchange + window run twice
-    local = ranged.withColumn("_local_cum", F.sum("n_tokens").over(w)).persist(
-        StorageLevel.MEMORY_AND_DISK
+    local = pin(
+        ranged.withColumn("_local_cum", F.sum("n_tokens").over(w)),
+        "pack_sequences",
     )
     # one row per partition -> exclusive prefix offsets on the driver
     totals = (

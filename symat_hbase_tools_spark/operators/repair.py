@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.operators.cdc import apply_changeset
 from symat_hbase_tools_spark.operators.kv import visible_cells
+from symat_hbase_tools_spark.plans.serve_cache import pin
 
 COORD = ["row", "family", "qualifier"]
 
@@ -96,20 +97,18 @@ def repair_visible(
     a full re-resolve instead). At 100 TB that removes a full re-shuffle and
     re-aggregate of the replica from the read path.
 
-    The two visible views are persisted because each feeds two plan branches
+    The two visible views are pinned because each feeds two plan branches
     (diff + apply); Spark does not dedupe common subplans.
     """
-    from pyspark import StorageLevel
-
-    a = (
-        visible_cells(authoritative)
-        .select(*COORD, F.col("value").alias("_a"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    a = pin(
+        visible_cells(authoritative).select(*COORD, F.col("value").alias("_a")),
+        "repair_authoritative",
     )
-    r = (
-        visible_cells(replica)
-        .select(*COORD, F.col("ts").alias("_rts"), F.col("value").alias("_r"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    r = pin(
+        visible_cells(replica).select(
+            *COORD, F.col("ts").alias("_rts"), F.col("value").alias("_r")
+        ),
+        "repair_replica",
     )
     j = a.join(r.select(*COORD, "_r"), COORD, "full_outer")
     change = (

@@ -526,7 +526,10 @@ def test_ivf_caches_survive_session_identity_changes(spark, tmp_path):
     session's applicationId must be evicted, never served."""
     import os
 
+    from pyspark import StorageLevel
+
     import symat_hbase_tools_spark.operators.similarity as S
+    from symat_hbase_tools_spark.plans import serve_cache
     from symat_hbase_tools_spark.sources.tables import load_table
 
     idx = str(tmp_path / "idx")
@@ -534,10 +537,13 @@ def test_ivf_caches_survive_session_identity_changes(spark, tmp_path):
     queries = load_table(spark, SF_DIR, "embeddings").orderBy("vec_id").limit(5)
 
     class DeadProbeCache:
+        def sameSemantics(self, other):
+            raise RuntimeError("Cannot call methods on a stopped SparkContext")
+
         def unpersist(self, blocking=False):
             raise RuntimeError("Cannot call methods on a stopped SparkContext")
 
-    S._IVF_PROBE_CACHES.append(DeadProbeCache())
+    serve_cache._PINS["ivf_probe"] = DeadProbeCache()
     cent_path = os.path.abspath(os.path.join(idx, "centroids"))
     dead_key = ("application_from_a_stopped_session", cent_path)
     S._IVF_RELATION_CACHE[dead_key] = object()  # not a usable DataFrame
@@ -545,9 +551,9 @@ def test_ivf_caches_survive_session_identity_changes(spark, tmp_path):
     got = S.ann_ivf_query(spark, idx, queries, k=3, n_probe=2).collect()
 
     assert len(got) > 0
-    assert not S._IVF_PROBE_CACHES or all(
-        not isinstance(c, DeadProbeCache) for c in S._IVF_PROBE_CACHES
-    )
+    probe = serve_cache._PINS["ivf_probe"]
+    assert not isinstance(probe, DeadProbeCache)
+    assert probe.storageLevel == StorageLevel.MEMORY_AND_DISK
     assert dead_key not in S._IVF_RELATION_CACHE
     live_key = (spark.sparkContext.applicationId, cent_path)
     assert live_key in S._IVF_RELATION_CACHE
@@ -1357,8 +1363,12 @@ def test_serve_many_probe_cache_bounded_across_both_paths(spark, tmp_path):
     """The r11 advisory fix: alternating ann_ivf_query and ann_ivfpq_query
     calls in one long-lived session must never accumulate persisted probe
     tables — each call releases the previous call's cache (bounded at ONE
-    outstanding entry), whichever path persisted it."""
+    outstanding entry), whichever path persisted it. Checked on Spark's
+    cache: every earlier call's probe handle reads StorageLevel.NONE."""
+    from pyspark import StorageLevel
+
     import symat_hbase_tools_spark.operators.similarity as S
+    from symat_hbase_tools_spark.plans import serve_cache
     from symat_hbase_tools_spark.sources.tables import load_table
 
     idx = str(tmp_path / "idx")
@@ -1366,11 +1376,14 @@ def test_serve_many_probe_cache_bounded_across_both_paths(spark, tmp_path):
     S.ivf_index_add_pq(spark, idx, m=8, n_codes=16)
     queries = load_table(spark, SF_DIR, "embeddings").orderBy("vec_id").limit(5)
 
+    probes = []
     for i in range(4):
         fn = S.ann_ivf_query if i % 2 == 0 else S.ann_ivfpq_query
         rows = fn(spark, idx, queries, k=3, n_probe=2).collect()
         assert len(rows) > 0
-        assert len(S._IVF_PROBE_CACHES) <= 1, (i, S._IVF_PROBE_CACHES)
+        probes.append(serve_cache._PINS["ivf_probe"])
+        held = [j for j, p in enumerate(probes) if p.storageLevel != StorageLevel.NONE]
+        assert held == [i], (i, held)
 
 
 def test_binary_quantize_packing_matches_numpy(spark):
